@@ -344,8 +344,9 @@ _SQL_FUNCTIONS = [
     """,
     # td_time_format: takes a SPARK datetime pattern (the Python helper
     # accepts strftime and translates; SQL callers pass Spark patterns).
+    # tz defaults to UTC, so TD's two-argument form resolves too.
     """
-    CREATE OR REPLACE TEMPORARY FUNCTION td_time_format(t BIGINT, fmt STRING, tz STRING)
+    CREATE OR REPLACE TEMPORARY FUNCTION td_time_format(t BIGINT, fmt STRING, tz STRING DEFAULT NULL)
     RETURNS STRING
     RETURN date_format(from_utc_timestamp(timestamp_seconds(t), coalesce(tz, 'UTC')), fmt)
     """,

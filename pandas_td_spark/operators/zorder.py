@@ -10,18 +10,25 @@ on any one of them touches O(files^(1-1/d)) of the data instead of all of
 it — parquet row-group min/max stats do the skipping with zero reader
 cooperation.
 
-Implementation is pure JVM expression work:
+Implementation is pure JVM expression work, and which rows land in which
+file depends only on the data, never on the core count or the input
+partitioning:
 
-1. per-column quantile boundaries (``approxQuantile``, driver-side list of
-   2^bits cut points — one pass, mergeable sketch under the hood) turn any
-   numeric distribution, however skewed, into near-uniform bucket ranks;
-2. ``width_bucket`` maps values to ranks; a ``shiftleft``/``|`` chain
-   interleaves rank bits into the Morton code (whole-stage codegen — no
-   Python);
-3. the Morton column feeds ``repartitionByRange`` + ``sortWithinPartitions``
-   and is dropped from the files.
+1. exact per-column quantile boundaries (``approxQuantile`` with zero
+   relative error, one pass for all columns; a driver-side list of 2^bits
+   cut points) turn any numeric distribution, however skewed, into
+   near-uniform bucket ranks — a binary WHEN tree over the literal cuts
+   (O(bits) comparisons per row, whole-stage codegen, no Python);
+2. a ``shiftleft``/``|`` chain interleaves rank bits into the Morton code;
+3. exact ``num_files``-quantiles of the Morton code cut it into
+   equal-count files, and each row is shuffled straight to its file's
+   partition (a hash slot key per file; no sampled range bounds), sorted
+   within the file, and the code dropped from the output.
 
-At 100 TB the only added costs are the quantile pass and the same single
+Exactness has a price: each quantile pass keeps every distinct key in its
+aggregation state (for the Morton pass at most 2^(d*bits) of them), so
+the cost grows with column cardinality rather than staying a fixed-size
+sketch. Beyond the two quantile passes, the write pays the same single
 shuffle any sorted write pays.
 """
 
@@ -31,6 +38,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pandas_td_spark.operators.ranking import _first_match_expr
 
 __all__ = [
     "with_zorder_key",
@@ -82,19 +91,6 @@ def morton_interleave_sql(
     return "(" + " + ".join(terms) + ")"
 
 
-def _bucket_rank(col: str, boundaries: list[float]) -> Column:
-    """0-based near-uniform bucket rank via precomputed quantile cuts."""
-    n = len(boundaries) + 1
-    arr = F.array(*[F.lit(float(b)) for b in boundaries])
-    # width_bucket over explicit cut points: count boundaries <= value
-    rank = F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, b: acc + F.when(F.col(col).cast("double") >= b, 1).otherwise(0),
-    )
-    return F.least(rank, F.lit(n - 1))
-
-
 def with_zorder_key(
     df: DataFrame,
     cols: Sequence[str],
@@ -104,21 +100,23 @@ def with_zorder_key(
     """Append the Morton key of quantile-rank bits of ``cols`` (2-4
     columns; locality dilutes with dimensionality).
 
-    All column quantiles come from ONE ``approxQuantile`` pass (the
-    multi-column overload), and each column's rank — an O(n_buckets)
-    aggregate fold — is materialized once in a temp column before the bit
-    interleave references it ``bits_per_col`` times (no reliance on
-    codegen CSE to dedupe the fold)."""
+    All column quantiles come from ONE exact ``approxQuantile`` pass (the
+    multi-column overload), and each column's rank is materialized once
+    in a temp column before the bit interleave references it
+    ``bits_per_col`` times (no reliance on codegen CSE to dedupe it)."""
     if not 2 <= len(cols) <= 4:
         raise ValueError("zorder wants 2-4 columns")
     n_buckets = 1 << bits_per_col
     quantiles = [i / n_buckets for i in range(1, n_buckets)]
-    all_cuts = df.stat.approxQuantile(list(cols), quantiles, 0.001)
+    all_cuts = df.stat.approxQuantile(list(cols), quantiles, 0.0)
     rank_cols = []
     for j, (c, cuts) in enumerate(zip(cols, all_cuts)):
-        # dedupe (heavy ties collapse cut points; rank range just shrinks)
+        # rank = number of cut points <= value; heavy ties collapse cut
+        # points, so the rank range just shrinks
         rc = f"{out_col}_r{j}"
-        df = df.withColumn(rc, _bucket_rank(c, sorted(set(cuts))))
+        x = F.col(c).cast("double")
+        rank = _first_match_expr(x, sorted(set(cuts)), desc=False)
+        df = df.withColumn(rc, F.least(rank, F.lit(n_buckets - 1)))
         rank_cols.append(rc)
     z = morton_interleave([F.col(rc) for rc in rank_cols], bits_per_col)
     return df.withColumn(out_col, z).drop(*rank_cols)
@@ -133,6 +131,22 @@ def zorder_key(
     return keyed["__z"]
 
 
+def _hash_slot_keys(spark, n: int) -> list[int]:
+    """``keys[i]`` is a bigint that ``repartition(n, key)`` sends to
+    partition ``i``: hash partitioning places a row at ``pmod(hash(key),
+    n)``, so the smallest id per residue is read off ``hash`` itself
+    (64n ids leave a residue empty with odds about e^-64)."""
+    rows = (
+        spark.range(64 * n)
+        .selectExpr("id", f"pmod(hash(id), {n}) AS p")
+        .groupBy("p")
+        .agg(F.min("id").alias("k"))
+        .collect()
+    )
+    keys = {r.p: r.k for r in rows}
+    return [keys[i] for i in range(n)]
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -142,12 +156,28 @@ def write_zordered(
     mode: str = "errorifexists",
 ) -> None:
     """Write ``df`` as ``num_files`` Morton-clustered parquet files;
-    predicates on ANY of ``cols`` prune via row-group statistics."""
+    predicates on ANY of ``cols`` prune via row-group statistics.
+
+    File ``i`` holds the Morton codes between the exact ``i/num_files``
+    and ``(i+1)/num_files`` quantiles, so the layout is the same at any
+    parallelism (``repartitionByRange`` would cut at bounds sampled per
+    input partition)."""
+    keyed = with_zorder_key(df, cols, bits_per_col=bits_per_col)
+    probs = [i / num_files for i in range(1, num_files)]
+    bounds = sorted(set(keyed.stat.approxQuantile("__z", probs, 0.0)))
+    file_idx = _first_match_expr(F.col("__z"), bounds, desc=False)
+    # bigint like the ids the keys came from: hash(int) != hash(bigint)
+    slot = F.array(
+        *[
+            F.lit(k).cast("bigint")
+            for k in _hash_slot_keys(df.sparkSession, num_files)
+        ]
+    )
     (
-        with_zorder_key(df, cols, bits_per_col=bits_per_col)
-        .repartitionByRange(num_files, "__z")
+        keyed.withColumn("__slot", F.element_at(slot, file_idx + 1))
+        .repartition(num_files, "__slot")
         .sortWithinPartitions("__z")
-        .drop("__z")
+        .drop("__z", "__slot")
         .write.mode(mode)
         .parquet(path)
     )

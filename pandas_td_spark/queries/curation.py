@@ -166,8 +166,8 @@ def _gram_stats_sql(g: str) -> str:
 # multiple projections, so the aggregate re-evaluates per reference) —
 # reverted in round 8. q108 keeps `_gram_stats` because there the struct
 # is consumed once per n and its warm A/B held (1.596 -> 1.516 s).
-# Round-10 re-A/B of q108 (tools/ab_q108.py, interleaved 5-round warm
-# protocol at sf0.1): row-local 1.19 s median vs exploded-tagged 1.16 s
+# Round-10 re-A/B of q108 (interleaved 5-round warm protocol at
+# sf0.1): row-local 1.19 s median vs exploded-tagged 1.16 s
 # vs hashed-exploded 1.38 s vs fraction-direct-finish 1.63 s — the
 # exploded form's ~3% warm edge costs two O(corpus-tokens) shuffles the
 # zero-shuffle row-local form doesn't have, so row-local stays. Floor
@@ -1084,7 +1084,7 @@ def q108_gopher_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Gopher rule booleans + the conjunction keep flag.
 
     CLOSED AT FLOOR (r11). Five variants have now been A/B'd across
-    rounds 7-11 (tools/ab_q108.py, warm = min of runs 2-3 at sf0.1):
+    rounds 7-11 (warm = min of runs 2-3 at sf0.1):
     row-local _gram_stats (this form) ~1.19 s, single-explode tagged
     partial-agg ~1.16-1.20 s, hashed row-local ~2.9 s, hashed-exploded
     ~1.47 s, fraction-direct ~1.84 s. The tagged-explode's occasional

@@ -268,6 +268,33 @@ def test_deep_join_no_nested_loop(spark):
     assert "CartesianProduct" not in p
 
 
+def test_zorder_layout_ignores_input_partitioning(spark, tmp_path):
+    """Which rows land in which file depends on the data alone: the same
+    rows arriving in 1 or 5 input partitions (as on 1 or 5 cores) give
+    the same files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pandas_td_spark.operators.zorder import write_zordered
+
+    df = spark.range(20_000).selectExpr(
+        "pmod(hash(id), 1000) AS x", "pmod(hash(id * 7 + 3), 1000) AS y"
+    )
+    layouts = []
+    for parts in (1, 5):
+        out = str(tmp_path / f"p{parts}")
+        write_zordered(df.repartition(parts), out, cols=["x", "y"], num_files=4)
+        files = []
+        for f in os.listdir(out):
+            if f.endswith(".parquet"):
+                t = pq.read_table(os.path.join(out, f)).to_pydict()
+                files.append(sorted(zip(t["x"], t["y"])))
+        layouts.append(sorted(files))
+    assert len(layouts[0]) == 4
+    assert layouts[0] == layouts[1]
+
+
 def test_zorder_write_prunes_on_both_dimensions(spark, tmp_path):
     """Morton-clustered layout: a narrow range predicate on EITHER column
     must let parquet row-group min/max stats skip most files — the
@@ -303,7 +330,7 @@ def test_zorder_write_prunes_on_both_dimensions(spark, tmp_path):
         return skip
 
     # a 5%-wide range on EACH dimension skips a solid fraction of the 16
-    # files on statistics alone (range-sampled splits don't align exactly
+    # files on statistics alone (equal-count cuts don't align exactly
     # with z-strips, so demand ≥ 1/3 per dim, not the geometric ideal) …
     assert skippable("x", 4000, 4500) >= 6
     assert skippable("y", 4000, 4500) >= 6

@@ -1,120 +1,87 @@
-"""Driver-order and stale-tracking invariants (VERDICT r5 item 7).
+"""Driver-order rule and registry import hygiene.
 
 The driver certifies roughly the first 50 entries of ``queries()`` per
-round, so the ordering IS the certification plan. These tests pin:
-
-1. grouping — red > never-checked-oracle > stale > never-rows-only >
-   standing greens, so the ~50-row budget lands on the highest-signal
-   checks;
-2. stale entries can't rot — every ACTIVE-stale query (standing driver
-   row older than its last implementation change) must sit inside the
-   first-50 window, guaranteeing it is re-certified on the very next
-   driver run;
-3. auto-retire — once a driver row at/after ``round_changed`` exists the
-   entry stops influencing the order, so the hand-maintained map needs
-   no manual deletion and a forgotten entry is harmless.
+round, so the order is the certification plan: red rows first, then
+never-checked queries, then greens oldest-round first; oracle-backed
+before rows-only, then by name.
 """
 
 from __future__ import annotations
 
 from pandas_td_spark.queries import registry as R
 
-DRIVER_BUDGET = 50  # rows per round, observed constant since r1
 
-
-def _groups():
-    qs = R.all_queries()
-    latest = R._latest_driver_round()
-    out = {}
-    for name, q in qs.items():
-        rnd_st = latest.get(name)
-        rows_only = q.oracle is None
-        if rnd_st is not None and rnd_st[1] == "red":
-            out[name] = 0
-        elif rnd_st is None:
-            out[name] = 1 if not rows_only else 3
-        elif R._is_stale(name, latest):
-            out[name] = 2 if not rows_only else 4
-        else:
-            out[name] = 5
-    return qs, out
+def _items(spec: dict[str, bool]) -> dict[str, R.Query]:
+    """Synthetic registry: name -> has an oracle."""
+    return {
+        n: R.Query(n, lambda spark, sf: None, "SELECT 1" if o else None)
+        for n, o in spec.items()
+    }
 
 
 def test_driver_order_is_grouped_weakest_last():
-    qs, groups = _groups()
-    seq = [groups[n] for n in qs]
-    assert seq == sorted(seq), "driver order must be non-decreasing by group"
-
-
-def test_active_stale_entries_fit_in_next_driver_window():
-    """A stale ORACLE-BACKED green that sorts outside the ~50-row budget
-    would never be re-certified — the map would rot silently (the
-    round-4/5 failure mode this ordering exists to close). Rows-only
-    stale entries (group 4) are allowed to wait one round behind
-    first-time checks when the window is tight: they must still sit
-    ahead of every standing green, so they certify as soon as the
-    backlog clears."""
-    qs, groups = _groups()
-    names = list(qs)
-    for n, g in groups.items():
-        if g == 2:
-            pos = names.index(n)
-            assert pos < DRIVER_BUDGET, (
-                f"{n} is active-stale but sorts at position {pos} — "
-                f"outside the ~{DRIVER_BUDGET}-row driver budget"
-            )
-    first_green = min(
-        (names.index(n) for n, g in groups.items() if g == 5),
-        default=len(names),
+    items = _items(
+        {
+            "g_r3": True,
+            "g_r3_rows": False,
+            "g_r1": True,
+            "g_r9": True,
+            "red_r9": True,
+            "red_r2_rows": False,
+            "new": True,
+        }
     )
-    for n, g in groups.items():
-        if g == 4:
-            assert names.index(n) < first_green, (
-                f"{n} (stale rows-only) must outrank every standing green"
-            )
-
-
-def test_stale_map_names_are_registered():
-    unknown = set(R._IMPL_CHANGED_SINCE_LAST_CHECK) - set(R.all_queries())
-    assert not unknown, f"stale map references unregistered queries: {unknown}"
-
-
-def test_stale_entry_auto_retires_on_fresh_row():
-    name = next(iter(R._IMPL_CHANGED_SINCE_LAST_CHECK))
-    changed = R._IMPL_CHANGED_SINCE_LAST_CHECK[name]
-    assert R._is_stale(name, {name: (changed - 1, "green")})
-    assert not R._is_stale(name, {name: (changed, "green")})
-    assert not R._is_stale(name, {name: (changed + 3, "green")})
-    # never-checked queries are group-1/3 by definition, not stale
-    assert not R._is_stale(name, {})
+    latest = {
+        "g_r3": (3, "green"),
+        "g_r3_rows": (3, "green"),
+        "g_r1": (1, "green"),
+        "g_r9": (9, "green"),
+        "red_r9": (9, "red"),
+        "red_r2_rows": (2, "red"),
+    }
+    assert R._driver_order(items, latest) == [
+        "red_r9",
+        "red_r2_rows",
+        "new",
+        "g_r1",
+        "g_r3",
+        "g_r3_rows",
+        "g_r9",
+    ]
 
 
 def test_never_checked_oracle_queries_lead():
-    """Every oracle-backed never-checked query must fit in the first-50
-    window together with the stale re-certs (the round-6 close-out set)."""
-    qs, groups = _groups()
-    names = list(qs)
-    must_certify = [n for n, g in groups.items() if g in (0, 1, 2)]
-    over = [n for n in must_certify if names.index(n) >= DRIVER_BUDGET]
-    assert not over, (
-        f"{len(over)} red/never-checked/stale queries sort outside the "
-        f"{DRIVER_BUDGET}-row window: {over[:5]}"
+    items = _items({"b_new": True, "a_new_rows": False, "old": True})
+    latest = {"old": (1, "green")}
+    assert R._driver_order(items, latest) == ["b_new", "a_new_rows", "old"]
+
+
+def test_all_modules_import_without_session():
+    """``queries()`` imports every query module before the driver has a
+    session, so an import-time SparkContext dependency (a DDL-string
+    return type parsed through the active context, say) would break the
+    driver contract. Every package module must import in a bare
+    subprocess with no Spark session."""
+    import subprocess
+    import sys
+
+    code = (
+        "import importlib, pkgutil, pandas_td_spark\n"
+        "bad = []\n"
+        "for m in pkgutil.walk_packages(pandas_td_spark.__path__,"
+        " 'pandas_td_spark.'):\n"
+        "    try:\n"
+        "        importlib.import_module(m.name)\n"
+        "    except Exception as e:\n"
+        "        bad.append(f'{m.name}: {e}')\n"
+        "assert not bad, bad\n"
     )
-
-
-def test_stale_map_has_no_duplicate_keys():
-    """A duplicate dict key silently drops the earlier entry — the exact
-    failure mode that would hide a stale round number."""
-    import ast
-    import inspect
-
-    import pandas_td_spark.queries.registry as reg
-
-    tree = ast.parse(inspect.getsource(reg))
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Dict):
-            keys = [
-                k.value for k in node.keys if isinstance(k, ast.Constant)
-            ]
-            dupes = {k for k in keys if keys.count(k) > 1}
-            assert not dupes, f"duplicate stale-map keys: {dupes}"
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, (
+        f"modules need a live session to import:\n{proc.stderr[-2000:]}"
+    )

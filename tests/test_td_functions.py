@@ -114,6 +114,23 @@ def test_python_and_sql_surfaces_agree_on_format(spark, t):
     ).strftime("%Y-%m-%d %H:%M:%S")
 
 
+def test_sql_time_format_two_argument_form(spark):
+    """TD documents TD_TIME_FORMAT(time, format) with the zone optional;
+    the SQL function defaults it to UTC and leaves the 3-arg form as is."""
+    row = spark.sql(
+        "select td_time_format(3600, 'yyyy-MM-dd HH') as a,"
+        " td_time_format(3600, 'yyyy-MM-dd HH', 'UTC') as b,"
+        " td_time_format(3600, 'yyyy-MM-dd HH', NULL) as c,"
+        " td_time_format(3600, 'yyyy-MM-dd HH', 'Asia/Tokyo') as d"
+    ).first()
+    assert (row.a, row.b, row.c, row.d) == (
+        "1970-01-01 01",
+        "1970-01-01 01",
+        "1970-01-01 01",
+        "1970-01-01 10",
+    )
+
+
 def test_sql_time_range_matches_python(spark):
     from pandas_td_spark.functions.td import td_time_range
 
